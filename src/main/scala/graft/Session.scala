@@ -173,7 +173,7 @@ object Session {
       // scale the advisory size and genuine data volumes dominate and
       // the floor never binds (same stance as autoOpenCost).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", (64 * 1024).toString))
+        (64 * 1024).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       // Scan-split open-cost floor: explicit SPARK_GRAFT_OPEN_COST wins,
       // then the row-group-derived auto value installed by
@@ -194,22 +194,15 @@ object Session {
       // 50.2 s task-time with 12.5 s GC under hash aggregation vs
       // 31.4 s / 6.2 s sort-based (the sorted path feeds sorted runs
       // to the merging buffer; the big map churns the 8 GB heap).
-      // Env-tunable for future probes at other memory sizings.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "128"))
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
       // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // RocksDB-backed streaming state: state spills to local disk
       // instead of living on the JVM heap — the setting that lets the
       // stateful operators (dedup, CEP, stream-stream joins) carry
-      // 100 TB-scale key cardinalities. Default on; SPARK_GRAFT_HDFS_STATE=1
-      // reverts to the in-memory provider.
+      // 100 TB-scale key cardinalities.
       .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_HDFS_STATE")
-            .exists(v => v == "1" || v.equalsIgnoreCase("true")))
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
       // Plan-description verbosity for listener events. Every query
       // execution EAGERLY formats its physical plan into the
@@ -222,8 +215,7 @@ object Session {
       // measured as part of the per-stage-transition gap). Purely a
       // diagnostics-verbosity knob: plans, results and scheduling are
       // untouched at any scale.
-      .config("spark.sql.ui.explainMode",
-        sys.env.getOrElse("SPARK_GRAFT_UI_EXPLAIN", "simple"))
+      .config("spark.sql.ui.explainMode", "simple")
       // catalog tables (bucketed layouts) land outside the repo tree
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))

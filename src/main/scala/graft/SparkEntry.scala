@@ -18,11 +18,11 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    GmallRegistry.queries ++ LlmRegistry.queries
+    QuerySpec.all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.
     */
   def oracleSql: Map[String, String] =
-    GmallRegistry.oracleSql ++ LlmRegistry.oracleSql
+    QuerySpec.all.map(q => q.name -> q.oracle).toMap
 }

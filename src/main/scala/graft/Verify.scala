@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
 object Verify {
@@ -17,11 +17,9 @@ object Verify {
     Session.sizeShuffleFor(sfDir)
     val spark = Session.get("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-      // protocol total order (mirrors the oracle's ORDER BY) applied at
-      // the dump edge, not inside the operators — see [[Proto]]
+    QuerySpec.all
+      .filter(q => subset.isEmpty || subset(q.name))
+      .foreach { case QuerySpec(name, fn, _, order) =>
       try {
         val df = fn(spark, sfDir)
         // dump-edge contract: scalar columns only. The driver's checker
@@ -36,8 +34,13 @@ object Verify {
         })
         require(nested.isEmpty, s"non-scalar dump columns: " +
           nested.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", "))
-        Proto.order.get(name).map(c => df.orderBy(c: _*)).getOrElse(df)
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        // protocol total order (mirrors the oracle's ORDER BY) applied at
+        // the dump edge, not inside the operators — see [[QuerySpec]]
+        val dump = order match {
+          case QuerySpec.By(cols @ _*) => df.orderBy(cols: _*)
+          case QuerySpec.Semantic => df
+        }
+        dump.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

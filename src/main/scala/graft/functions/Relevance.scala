@@ -9,7 +9,7 @@ import graft.Tables._
   * data pipeline (query-focused corpus slicing, nearest-neighbor text
   * search by lexical score, per-doc salient-term extraction).
   *
-  * Exactness convention (see GmallRegistry scaladoc): no transcendentals
+  * Exactness convention (see QuerySpec scaladoc): no transcendentals
   * — the classic `ln(N/df)` idf is replaced by the raw ratio `N/df`
   * (same ordering, exact BIGINT/BIGINT double division in both engines),
   * and every float expression is written with IDENTICAL literal

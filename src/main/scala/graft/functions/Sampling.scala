@@ -380,7 +380,7 @@ object Sampling {
     * fluency (easy → hard), the ordering a curriculum-learning schedule
     * consumes. This is the one operator class the engine otherwise
     * avoids on purpose (total order is usually protocol overhead — see
-    * [[graft.Proto]]); when a user genuinely needs it, the scalable
+    * [[graft.QuerySpec]]); when a user genuinely needs it, the scalable
     * form is range-partition + per-partition offsets, NEVER
     * `row_number() OVER ()` — an empty-window rank funnels the corpus
     * through ONE task. Here: `repartitionByRange` (sampled range

@@ -371,9 +371,9 @@ object RelationalOps {
     * `RewriteMarkerJoins` into the native
     * [[org.apache.spark.sql.graftexpr.AsOfJoinExec]], so a SQL-first
     * consumer reaches the sort-merge as-of operator with no Scala
-    * imports (the session registers the marker; a deployed cluster sets
-    * `spark.sql.extensions=...GraftExtensions`). Identical key/order/
-    * strictness contract to the native form — same oracle.
+    * imports (the session registers the marker through
+    * `GraftFunctions.registerAll`). Identical key/order/strictness
+    * contract to the native form — same oracle.
     */
   def asofAttributionSql(spark: SparkSession, dir: String): DataFrame = {
     events(spark, dir).createOrReplaceTempView("graft_events_v")

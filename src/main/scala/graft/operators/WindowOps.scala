@@ -256,8 +256,7 @@ object WindowOps {
     * bounded-heap `top_k_ids` — the proof a SQL-first consumer (BI
     * tool, notebook, `spark-sql` shell) can reach the engine's custom
     * Catalyst surface with no Scala imports ([[graft.Session]]
-    * registers the functions; a deployed cluster sets
-    * `spark.sql.extensions=...GraftExtensions`).
+    * registers the functions through `GraftFunctions.registerAll`).
     *
     * Scale shape is what the SQL planner derives: per-(day, user)
     * partial aggregate, then a day-keyed aggregate whose UV is a

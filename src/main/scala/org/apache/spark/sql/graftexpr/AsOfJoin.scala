@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * rather than reject its own documented workaround.
   *
   * This is the custom-operator tier of the engine (logical node →
-  * strategy → physical exec, injected via [[GraftExtensions]] or
+  * strategy → physical exec, injected by
   * [[GraftFunctions.registerAll]]): Spark has no as-of relational
   * operator, and the composable alternatives either blow up (theta join:
   * every right row with ord <= left.ord, then argmax — quadratic within

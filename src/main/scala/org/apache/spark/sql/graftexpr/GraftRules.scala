@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * user porting a portable SQL pipeline writes). With this rule those
   * queries silently get the fast kernel while the optimized plan remains
   * value-identical — the engine's example of the Catalyst
-  * `Rule[LogicalPlan]` extension tier, injected via [[GraftExtensions]]
-  * or `experimental.extraOptimizations`.
+  * `Rule[LogicalPlan]` extension tier, injected by
+  * [[GraftFunctions.registerAll]] into `experimental.extraOptimizations`.
   */
 object RewriteMd5Prefix60 extends Rule[LogicalPlan] {
 

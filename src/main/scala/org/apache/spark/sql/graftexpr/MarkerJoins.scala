@@ -14,9 +14,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType}
 /** SQL surface for the engine's two non-equi join operators. A SQL-first
   * consumer (BI tool, `spark-sql` shell) writes the join condition with
   * a MARKER function, and [[RewriteMarkerJoins]] — the `Rule[LogicalPlan]`
-  * tier, installed by [[GraftFunctions.registerAll]] /
-  * [[GraftExtensions]] — rewrites the marked join into the scale-out
-  * plan before physical planning:
+  * tier, installed by [[GraftFunctions.registerAll]] — rewrites the
+  * marked join into the scale-out plan before physical planning:
   *
   *   - `... FROM l [LEFT] JOIN r ON asof_match(lkeys, rkeys, lorder,
   *     rorder[, strict[, tolerance]])` → the native [[AsOfJoin]]
@@ -50,9 +49,8 @@ abstract class JoinMarker extends Expression with CodegenFallback {
     throw new UnsupportedOperationException(
       s"$markerName is a join-condition marker rewritten by RewriteMarkerJoins; " +
         "it cannot be evaluated directly. Install the engine extensions " +
-        "(GraftFunctions.registerAll or spark.sql.extensions=" +
-        "org.apache.spark.sql.graftexpr.GraftExtensions) and use it only " +
-        "in a JOIN ... ON condition.")
+        "(GraftFunctions.registerAll) and use it only in a JOIN ... ON " +
+        "condition.")
 }
 
 /** `asof_match(lkeys, rkeys, lorder, rorder[, strict[, tolerance]])` —

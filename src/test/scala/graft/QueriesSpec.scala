@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: every registered query runs on sf0.001 and returns rows;
-  * oracle coverage is complete; the flagship entry works. (Value-level
+  * names are unique; the flagship entry works. (Value-level
   * correctness is the driver's DuckDB gate, replicated locally by
   * tools/local_verify.py.)
   */
@@ -36,24 +36,11 @@ class QueriesSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"non-scalar dump columns: $offenders")
   }
 
-  test("every oracle key has a query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
-
-  test("Proto order keys and query keys agree (modulo semantically-ordered queries)") {
-    val dangling = Proto.order.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"Proto entry without query: $dangling")
-    // these end in a sort+limit (or TakeOrdered) — already totally ordered
-    val semanticallyOrdered =
-      Set("topk_orders", "q3_shipping_priority", "sample_uniform_k",
-        "q10_returned_items", "rel_bm25_search", "basket_lift_pairs",
-        "events_path_analysis", "text_token_lang_chi2",
-        "text_cooccurrence_pmi", "text_keyphrase_rake",
-        "ir_query_expansion", "ir_phrase_search", "ir_proximity_search")
-    val unsorted = SparkEntry.queries.keySet -- Proto.order.keySet --
-      semanticallyOrdered
-    assert(unsorted.isEmpty,
-      s"query without a Verify-protocol order: $unsorted")
+  test("a name registered twice is rejected, and the error names it") {
+    val a = QuerySpec.all.head
+    val b = QuerySpec.all.last
+    val e = intercept[IllegalArgumentException](
+      QuerySpec.requireUnique(Seq(a, b, a.copy(run = b.run))))
+    assert(e.getMessage.contains(a.name) && !e.getMessage.contains(b.name))
   }
 }
