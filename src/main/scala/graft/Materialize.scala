@@ -239,11 +239,8 @@ object Materialize {
     }
 
   /** Unpersist a SUPERSEDED loop checkpoint's blocks — the retirement
-    * step for iterative operators (pagerank, label propagation,
-    * k-core, components) whose round-N state is dead the moment round
-    * N+1's `localCheckpoint` materializes. Without it, a long-lived
-    * session accumulates every intermediate round's blocks until the
-    * ContextCleaner notices the RDDs are garbage post-GC.
+    * step of [[graft.functions.Fixpoint]] (which states why) and of BPE
+    * training's lazy rounds.
     *
     * Guard: acts only when the frame's analyzed plan IS the bare
     * `LogicalRDD` leaf a `localCheckpoint()` call returns — a

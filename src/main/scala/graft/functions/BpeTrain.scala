@@ -23,8 +23,8 @@ import graft.Tables._
   * single-row `limit(1).collect()` — a global sequential decision
   * inherent to BPE (merge k+1 depends on merge k), shipping ~40 bytes
   * per round to the driver, NOT a driver-side data loop. Lineage is
-  * flattened per round with localCheckpoint (the [[Dedup.minhashClusters]]
-  * iteration idiom).
+  * flattened per round with a lazy localCheckpoint ([[Fixpoint]] says
+  * why round state is materialized, and why this loop retires its own).
   *
   * Symbol encoding makes literal string replace EXACTLY the BPE merge
   * step, on both engines: each symbol is wrapped in angle brackets and
@@ -63,10 +63,13 @@ object BpeTrain {
 
   /** The shared K-round loop: returns the learned merge table AND the
     * word-vocab frame in its final (fully-merged) state — training and
-    * encoding are the same computation read from opposite ends.
+    * encoding are the same computation read from opposite ends. The
+    * final frame is a lazy checkpoint that still reads the frame it was
+    * derived from (returned third): a caller that drops the final frame
+    * retires both.
     */
   private def trainLoop(spark: SparkSession, dir: String, merges: Int)
-      : (Seq[(Long, String, String, Long)], DataFrame) = {
+      : (Seq[(Long, String, String, Long)], DataFrame, Option[DataFrame]) = {
     val init = documents(spark, dir)
       .select(explode(TextAnalysis.tokens($"text")).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("freq"))
@@ -79,7 +82,15 @@ object BpeTrain {
     // per-round job count; lineage is still severed once per round and
     // each replace still executes exactly once, so the merge sequence
     // and all values are unchanged at any scale.
+    //
+    // A lazy `localCheckpoint` still persists its RDD on creation, and a
+    // frame's blocks are only dead once the frame derived from it has
+    // materialized — one round later than on the eager [[Fixpoint]]
+    // loop. So each round retires the frame two back: the argmax job
+    // has just materialized `words`, and nothing reads its parent any
+    // more.
     var words = init.localCheckpoint(false)
+    var parent = Option.empty[DataFrame] // the frame `words` derives from
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var k = 0
     while (k < merges) {
@@ -88,26 +99,29 @@ object BpeTrain {
         .groupBy($"pair").agg(sum($"freq").as("pf"))
         .orderBy($"pf".desc, $"pair".asc)
         .limit(1).collect()
+      parent.foreach(Materialize.retireCheckpoint)
       require(best.nonEmpty,
         s"bpe_train: corpus exhausted after ${k} merges (asked for $merges)")
       val pair = best(0).getString(0)
       val pf = best(0).getLong(1)
       val merged = pair.replace("> <", "")
       learned += ((k + 1L, pair, merged, pf))
+      parent = Some(words)
       words = words
         .withColumn("syms", expr(s"replace(syms, '$pair', '$merged')"))
         .localCheckpoint(false)
       k += 1
     }
-    (learned.toSeq, words)
+    (learned.toSeq, words, parent)
   }
 
   def bpeTrain(spark: SparkSession, dir: String,
       merges: Int = DefaultMerges): DataFrame = {
     // graft's own $-interpolator is in scope; mask the SQLImplicits one
     import spark.implicits.{StringToColumn => _, _}
-    trainLoop(spark, dir, merges)._1
-      .toDF("merge_rank", "pair", "merged", "pair_freq")
+    val (learned, words, parent) = trainLoop(spark, dir, merges)
+    (words +: parent.toSeq).foreach(Materialize.retireCheckpoint)
+    learned.toDF("merge_rank", "pair", "merged", "pair_freq")
   }
 
   /** Encode the word vocabulary with the learned merges: per distinct
@@ -118,7 +132,7 @@ object BpeTrain {
     */
   def bpeEncode(spark: SparkSession, dir: String,
       merges: Int = DefaultMerges): DataFrame = {
-    val (_, words) = trainLoop(spark, dir, merges)
+    val (_, words, _) = trainLoop(spark, dir, merges)
     words.select($"word",
       // decode the bracket encoding for display: "<th> <e>" → "th e"
       regexp_replace(regexp_replace($"syms", "> <", " "), "[<>]", "")

@@ -200,6 +200,68 @@ object Dedup {
     */
   val MaxClusterIters = 32
 
+  /** Distributed connected components by min-label propagation with
+    * pointer jumping, over a DIRECTED edge frame (both directions
+    * present; columns `a`, `b`). Returns (doc_id, label) for every
+    * edge endpoint — singletons (nodes absent from the edge set) are
+    * the CALLER's join-back, because only the caller knows the full
+    * vertex universe. Shared by [[minhashClusters]] and the k-NN
+    * graph's `graph_components`; rounds run on the [[Fixpoint]] loop.
+    */
+  private[graft] def components(edges0: org.apache.spark.sql.DataFrame):
+      org.apache.spark.sql.DataFrame = {
+    val edges = edges0.localCheckpoint(true)
+    // Iterate over EDGE ENDPOINTS only: a node absent from the pair
+    // graph can never change label, so singletons — the overwhelming
+    // majority of a deduped corpus — skip the loop entirely and join
+    // back at the end. The per-round shuffles are bounded by the
+    // candidate-pair graph (<= 2*|pairs| nodes), not corpus size: at
+    // 100 TB that is the difference between iterating over billions of
+    // rows O(log n) times and iterating over the near-dup minority.
+    val nodes = edges.select($"a".as("doc_id")).distinct().localCheckpoint(true)
+    val init = nodes.withColumn("label", $"doc_id").localCheckpoint(true)
+    Materialize.retireCheckpoint(nodes) // consumed by the init checkpoint
+    // state: (doc_id, old, label) — the round's STARTING label rides
+    // along as `old`, so convergence is a filter on the round's own
+    // output instead of a third join back to the previous frame
+    val fp = Fixpoint(init, MaxClusterIters) { (state, _) =>
+      val labels = state.select($"doc_id", $"label")
+      val nbrMin = edges
+        .join(labels.select($"doc_id".as("nbr"), $"label".as("nbr_label")),
+          $"b" === $"nbr")
+        .groupBy($"a").agg(min($"nbr_label").as("nbr_min"))
+      // materialized before the self-join below, which references it on
+      // BOTH sides — without this the neighbor-min shuffle join runs
+      // twice per round
+      val stepped = labels
+        .join(nbrMin, $"doc_id" === $"a", "left")
+        .select($"doc_id", $"label".as("old"),
+          least($"label", coalesce($"nbr_min", $"label")).as("label"))
+        .localCheckpoint(true)
+      // pointer jumping: follow one's label to ITS label — path halving
+      val next = stepped
+        .join(stepped.select($"doc_id".as("l2"), $"label".as("label2")),
+          $"label" === $"l2", "left")
+        .select($"doc_id", $"old",
+          least($"label", coalesce($"label2", $"label")).as("label"))
+        .localCheckpoint(true)
+      Materialize.retireCheckpoint(stepped) // half-step, consumed by `next`
+      if (next.filter($"label" =!= $"old").isEmpty) {
+        Materialize.retireCheckpoint(next) // same labels as `state`
+        None
+      } else Some(next)
+    }
+    if (!fp.converged)
+      throw new IllegalStateException(
+        s"components did not converge in $MaxClusterIters rounds — " +
+          "with pointer jumping this indicates a bug, not a long chain")
+    Materialize.retireCheckpoint(edges) // referenced only inside the loop
+    // the loop never retires `init`; it is still the state when round 1
+    // changes no label (no edges, or self-loops only)
+    if (!(fp.state eq init)) Materialize.retireCheckpoint(init)
+    fp.state.select($"doc_id", $"label")
+  }
+
   /** Near-dup CLUSTER resolution — the step after pair generation that
     * large-scale dedup actually keys on: connected components over the
     * [[minhashPairs]] graph, every document labeled with its component's
@@ -218,71 +280,6 @@ object Dedup {
     * [[MaxClusterIters]] throws rather than returning a silently
     * inconsistent clustering (duplicate keepers).
     */
-  /** Distributed connected components by min-label propagation with
-    * pointer jumping, over a DIRECTED edge frame (both directions
-    * present; columns `a`, `b`). Returns (doc_id, label) for every
-    * edge endpoint — singletons (nodes absent from the edge set) are
-    * the CALLER's join-back, because only the caller knows the full
-    * vertex universe. Shared by [[minhashClusters]] and the k-NN
-    * graph's `graph_components`; see the in-loop comments for the
-    * per-round materialization discipline.
-    */
-  private[graft] def components(edges0: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = {
-    val edges = edges0.localCheckpoint(true)
-    // Iterate over EDGE ENDPOINTS only: a node absent from the pair
-    // graph can never change label, so singletons — the overwhelming
-    // majority of a deduped corpus — skip the loop entirely and join
-    // back at the end. The per-round shuffles are bounded by the
-    // candidate-pair graph (<= 2*|pairs| nodes), not corpus size: at
-    // 100 TB that is the difference between iterating over billions of
-    // rows O(log n) times and iterating over the near-dup minority.
-    val nodes = edges.select($"a".as("doc_id")).distinct().localCheckpoint(true)
-    var labels = nodes.withColumn("label", $"doc_id").localCheckpoint(true)
-    // round N's state (and its half-step) is dead once round N+1 pins —
-    // retire eagerly instead of leaving up to 2×MaxClusterIters block
-    // sets for the ContextCleaner
-    var prevPinned = labels
-    Materialize.retireCheckpoint(nodes) // consumed by the init checkpoint
-    var converged = false
-    var iter = 0
-    while (!converged && iter < MaxClusterIters) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("nbr"), $"label".as("nbr_label")),
-          $"b" === $"nbr")
-        .groupBy($"a").agg(min($"nbr_label").as("nbr_min"))
-      // materialized before the self-join below, which references it on
-      // BOTH sides — without this the neighbor-min shuffle join runs
-      // twice per round. The round's STARTING label rides along as
-      // `old`, so convergence is a filter on the round's own output
-      // instead of a third join back to the previous frame.
-      val stepped = labels
-        .join(nbrMin, $"doc_id" === $"a", "left")
-        .select($"doc_id", $"label".as("old"),
-          least($"label", coalesce($"nbr_min", $"label")).as("label"))
-        .localCheckpoint(true)
-      // pointer jumping: follow one's label to ITS label — path halving
-      val next = stepped
-        .join(stepped.select($"doc_id".as("l2"), $"label".as("label2")),
-          $"label" === $"l2", "left")
-        .select($"doc_id", $"old",
-          least($"label", coalesce($"label2", $"label")).as("label"))
-        .localCheckpoint(true)
-      converged = next.filter($"label" =!= $"old").isEmpty
-      Materialize.retireCheckpoint(stepped) // consumed by `next`'s pin
-      Materialize.retireCheckpoint(prevPinned)
-      prevPinned = next
-      labels = next.select($"doc_id", $"label")
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"components did not converge in $MaxClusterIters rounds — " +
-          "with pointer jumping this indicates a bug, not a long chain")
-    Materialize.retireCheckpoint(edges) // referenced only inside the loop
-    labels
-  }
-
   def minhashClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashPairsShared(spark, dir).select($"a", $"b")
     val labels = components(

@@ -25,20 +25,10 @@ import graft._
   * Scale shape per round: ranks ⋈ edges on the already-partitioned src
   * key, one aggregation keyed by dst — the textbook iterative
   * join-agg; [[Rounds]] is a constant, so the whole computation is a
-  * fixed round count with no driver-side data loops.
-  *
-  * Iteration is MATERIALIZED, not folded lazily: edges, the node table
-  * and every round's ranks are eagerly `localCheckpoint`ed, so round
-  * N+1's plan is a join over two leaf relations instead of a
-  * re-optimized, re-executed N-round lineage (the lazy fold cost 9.1 s
-  * at sf0.1 — ~8.5 s of it round-over-round re-planning/re-execution —
-  * vs 0.59 s for the underlying k-NN graph; the GraphX iterative-cache
-  * pattern). `localCheckpoint` (executor-local blocks, lineage
-  * truncated) rather than reliable `checkpoint` because the inter-round
-  * state is n rows of four longs and recomputing on executor loss just
-  * replays bounded work; a multi-hour production run on a real cluster
-  * would flip to `checkpoint` on the cluster FS for fault tolerance —
-  * the plan shape is identical.
+  * fixed round count with no driver-side data loops. Edges, the node
+  * table and every round's ranks are checkpointed leaves, so each
+  * round's plan joins two materialized relations ([[Fixpoint]] holds
+  * the materialization rationale for every graph loop).
   */
 object GraphRank {
 
@@ -63,21 +53,17 @@ object GraphRank {
       .select(col("src").as("vec_id"), col("outdeg"), col("nn"))
       .localCheckpoint()
     val init = nodes.withColumn("pr", expr(s"${Scale}L div nn"))
-    val ranked = (1 to Rounds).foldLeft(init) { case (ranks, _) =>
+    val ranked = Fixpoint(init, Rounds) { (ranks, _) =>
       val incoming = ranks
         .join(edges, ranks("vec_id") === edges("src"))
         .select(col("dst"), expr("pr div outdeg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inc"))
-      val stepped = nodes.join(incoming, nodes("vec_id") === incoming("dst"), "left")
+      Some(nodes.join(incoming, nodes("vec_id") === incoming("dst"), "left")
         .select(nodes("vec_id"), col("outdeg"), col("nn"),
           expr(s"(15L * ${Scale}L) div (100L * nn) + " +
             "(85L * coalesce(inc, 0L)) div 100L").as("pr"))
-        .localCheckpoint() // round N+1 consumes round N's materialized rows
-      // round N's blocks are dead now (round 1's input is `init`, a
-      // derived plan — the retire guard no-ops on it)
-      Materialize.retireCheckpoint(ranks)
-      stepped
-    }
+        .localCheckpoint())
+    }.state
     val out = ranked.select(col("vec_id"), col("outdeg"), col("pr"))
     Materialize.retireCheckpoint(nodes) // referenced only inside the loop
     out
@@ -267,8 +253,7 @@ object GraphRank {
     * Scale shape per round: labeled ranks ⋈ edges on the partitioned
     * src key, one (dst, label)-keyed count, one dst-keyed argmax, one
     * left join back — the [[pagerank]] iteration shape with a
-    * categorical payload; inter-round state is `localCheckpoint`ed for
-    * the same reasons documented there.
+    * categorical payload, on the same [[Fixpoint]] loop.
     */
   def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
     val edges = Similarity.knnGraphShared(spark, dir)
@@ -280,7 +265,7 @@ object GraphRank {
         col("truelab"))
       .localCheckpoint()
     val init = nodes.withColumn("lab", when(col("seeded"), col("truelab")))
-    val fin = (1 to LpRounds).foldLeft(init) { case (cur, _) =>
+    val fin = Fixpoint(init, LpRounds) { (cur, _) =>
       // (count, smallest-label) packed into one decimal so the argmax
       // stays a HashAggregate; labels are bounded far below 10^9
       val maj = cur.filter(col("lab").isNotNull)
@@ -291,14 +276,12 @@ object GraphRank {
           (lit(999999999L) - col("lab"))).as("o"))
         .select(col("dst"),
           (lit(999999999L) - (col("o") % 1000000000L)).cast("long").as("maj"))
-      val stepped = cur.join(maj, cur("vec_id") === maj("dst"), "left")
+      Some(cur.join(maj, cur("vec_id") === maj("dst"), "left")
         .select(cur("vec_id"), col("seeded"), col("truelab"),
           when(col("seeded"), col("truelab"))
             .otherwise(coalesce(col("maj"), col("lab"))).as("lab"))
-        .localCheckpoint()
-      Materialize.retireCheckpoint(cur) // no-op on round 1's derived init
-      stepped
-    }
+        .localCheckpoint())
+    }.state
     val out = fin.select(col("vec_id"), col("seeded"), col("lab").as("label"))
     Materialize.retireCheckpoint(nodes) // referenced only via `init`
     out
@@ -405,17 +388,6 @@ object GraphRank {
     */
   val CoreRounds = 6
 
-  /** Peel rounds the last [[kCore]] call ON THIS THREAD actually
-    * EXECUTED (the early-exit round that found an empty drop set
-    * included) — test observability for the convergence short-circuit;
-    * not part of any query result. Thread-local so concurrent kCore
-    * calls (parallel suites, a multi-tenant driver) can't race the
-    * spec's set-then-read pattern: the peel loop runs on the calling
-    * thread, so writer and reader are the same thread by construction.
-    */
-  private[graft] val lastPeelRounds: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(-1))
-
   /** `graph_kcore`: [[CoreK]]-core decomposition of the k-NN similarity
     * graph by [[CoreRounds]] rounds of synchronous peeling — drop every
     * surviving node whose degree is under K, remove its edges, repeat.
@@ -443,9 +415,8 @@ object GraphRank {
     * Scale shape per round: one degree aggregate of the edge explode
     * left-joined to the survivor vertex set + two anti-joins of the
     * edge set against the drop set, all on the partitioned vertex key;
-    * rounds are bounded by the fixed constant and inter-round state is
-    * `localCheckpoint`ed (the [[pagerank]] lineage-truncation
-    * discipline). Peeling is monotone — vertex and edge sets only
+    * rounds run on the [[Fixpoint]] loop, bounded by the fixed
+    * constant. Peeling is monotone — vertex and edge sets only
     * shrink — so round cost is bounded by the first, and a round whose
     * drop set is EMPTY proves the fixpoint: the loop exits early
     * (result row-identical to the unrolled budget — every skipped
@@ -465,86 +436,36 @@ object GraphRank {
           .groupBy(col("v")).agg(count(lit(1)).as("edge_deg")),
         Seq("v"), "left")
         .select(col("v"), coalesce(col("edge_deg"), lit(0L)).as("deg"))
-    // peeled(v, round) accumulates; vertices + edges shrink each round.
-    // Early exit: peeling is MONOTONE, so a round that drops nobody
-    // proves every remaining round would also drop nobody — the
-    // surviving sets are already the fixpoint and the skipped rounds
-    // would each have been a full survivor-degree aggregate plus two
-    // anti-joins over the whole surviving edge set (pure waste at
-    // 100×). The drop frame is eagerly localCheckpoint-ed, so the
-    // convergence test is a count on an already-materialized frame,
-    // and the early-exited result is ROW-IDENTICAL to the unrolled
-    // CoreRounds loop (empty drop ⇒ kept ≡ und, keptVerts ≡ verts,
-    // gone unchanged). The executed round count is recorded for the
-    // spec ([[lastPeelRounds]]).
+    // (surviving edges, surviving vertices, peeled (v, peel_round)):
+    // the edge and vertex sets shrink each round, the drop frames stay
+    // pinned because `peeled` reads every round's. An empty drop set
+    // proves the fixpoint (peeling is monotone), and the drop frame is
+    // checkpointed, so the convergence test is a count on materialized
+    // rows.
     import spark.implicits._
-    var und = und0
-    var verts = verts0
-    var gone = Seq.empty[(Long, Long)].toDF("v", "peel_round")
-    var round = 1
-    var settled = false
-    // LAZY round state (r17): keptVerts/kept are localCheckpoint(false),
-    // so they materialize INSIDE the next round's drop job instead of
-    // running one dedicated materialization job each — 4 jobs/round → 2
-    // at an unchanged stage count (the loop's sf0.1 wall is stages ×
-    // job/stage latency; at cluster scale fewer driver round-trips per
-    // round is the same win). Retiring a superseded checkpoint must now
-    // WAIT until the lazy frames that read it have materialized — an
-    // unpersisted localCheckpoint is unrecoverable, so retiring before
-    // the next eager action would make the lazy round state
-    // uncomputable. `pendingRetire` holds each round's superseded pins
-    // until the next drop checkpoint (an eager action over the lazy
-    // frames) proves materialization.
-    var pendingRetire: List[DataFrame] = Nil
-    while (round <= CoreRounds && !settled) {
-      val deg = survivorDegrees(und, verts)
-      val drop = deg.filter(col("deg") < CoreK).select(col("v"))
+    val peel = Fixpoint.run(
+        (und0, verts0, Seq.empty[(Long, Long)].toDF("v", "peel_round")),
+        CoreRounds)(s => Seq(s._1, s._2)) { case ((und, verts, gone), round) =>
+      val drop = survivorDegrees(und, verts).filter(col("deg") < CoreK)
+        .select(col("v"))
         .localCheckpoint()
-      // the drop job has materialized the lazy und/verts it read — the
-      // frames THEY superseded are dead now
-      pendingRetire.foreach(Materialize.retireCheckpoint)
-      pendingRetire = Nil
       if (drop.isEmpty) {
-        settled = true
         Materialize.retireCheckpoint(drop) // empty: nothing references it
-      } else {
-        val keptVerts = verts.join(drop, Seq("v"), "left_anti")
-          .localCheckpoint(eager = false)
-        val kept = und
-          .join(drop.select(col("v").as("a")), Seq("a"), "left_anti")
+        None
+      } else Some((
+        und.join(drop.select(col("v").as("a")), Seq("a"), "left_anti")
           .join(drop.select(col("v").as("b")), Seq("b"), "left_anti")
           .select(col("a"), col("b"))
-          .localCheckpoint(eager = false)
-        // queue the superseded round's pins for retirement after the
-        // lazy frames materialize. Round 1's edge frame is the SHARED
-        // undirected artifact — only loop-created checkpoints retire
-        // (the drops stay: `gone` references every round's)
-        pendingRetire =
-          (if (round > 1) List(und) else Nil) ::: List(verts)
-        und = kept
-        verts = keptVerts
-        gone = gone.union(
-          drop.select(col("v"), lit(round.toLong).as("peel_round")))
-        round += 1
-      }
+          .localCheckpoint(),
+        verts.join(drop, Seq("v"), "left_anti").localCheckpoint(),
+        gone.union(drop.select(col("v"), lit(round.toLong).as("peel_round")))))
     }
-    lastPeelRounds.set(if (settled) round else round - 1)
-    val (finalEdges, finalVerts, peeled) = (und, verts, gone)
-    // eager: materializes the last round's lazy survivor sets too (when
-    // the loop exited on the round budget rather than convergence)
+    val (finalEdges, finalVerts, peeled) = peel.state
     val finalDeg = survivorDegrees(finalEdges, finalVerts).localCheckpoint()
-    // the budget-exit path leaves the second-to-last round's pins
-    // queued; finalDeg's job just materialized their readers
-    pendingRetire.foreach(Materialize.retireCheckpoint)
-    pendingRetire = Nil
-    // the last survivor sets are dead once their degree table is pinned.
-    // Early exit in round 1 leaves finalEdges aliasing the SHARED
-    // undirected artifact (und0) — never retire that one: its
-    // localCheckpoint blocks are the session-wide k-NN edge set
-    // (components/modularity/triangles read it), and an unpersisted
-    // localCheckpoint is unrecoverable, not recomputable
-    if (!(finalEdges eq und0)) Materialize.retireCheckpoint(finalEdges)
-    Materialize.retireCheckpoint(finalVerts)
+    // the survivor sets, and the seed vertex set this call pinned, are
+    // dead once their degree table is pinned
+    peel.retireState()
+    Materialize.retireCheckpoint(verts0)
     // would a round CoreRounds+1 peel anyone? (1 row, broadcast)
     val convergence = finalDeg
       .agg(coalesce(min(col("deg") >= CoreK), lit(true)).as("converged"))

@@ -31,6 +31,15 @@ class DedupEdgeSpec extends AnyFunSuite {
     assert(keepers === clusters.values.toSet.size)
   }
 
+  test("components that converge in round 1 return the init labels") {
+    // round 1 changes no label, so the loop ends on components' own
+    // init checkpoint, which must stay readable
+    val loops = spark.range(1, 3).selectExpr("id AS a", "id AS b")
+    assert(Dedup.components(loops).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 1L), (2L, 2L)))
+    assert(Dedup.components(loops.limit(0)).collect().isEmpty)
+  }
+
   test("span coverage: fully-copied doc = 1.0, unique doc = 0.0, partial in between") {
     val docs = spark.createDataFrame(Seq(
       (1L, "alpha beta gamma delta epsilon"),

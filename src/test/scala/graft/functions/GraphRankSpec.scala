@@ -214,9 +214,9 @@ class GraphRankSpec extends AnyFunSuite {
         r += 1
       }
     }
-    GraphRank.lastPeelRounds.set(-1)
+    Fixpoint.last.remove()
     GraphRank.kCore(spark, dir).write.format("noop").mode("overwrite").save()
-    assert(GraphRank.lastPeelRounds.get === expectedExec,
+    assert(Fixpoint.last.get._1 === expectedExec,
       s"executed rounds vs oracle convergence round")
     // the pin is only meaningful if the fixture actually converges
     // early — assert it does, so a fixture change that silently makes
@@ -241,6 +241,7 @@ class GraphRankSpec extends AnyFunSuite {
     run(GraphRank.pagerank(spark, dir))
     run(GraphRank.labelPropagation(spark, dir))
     run(graft.functions.Dedup.minhashClusters(spark, dir))
+    run(BpeTrain.bpeEncode(spark, dir))
 
     val b1 = pinned
     run(GraphRank.kCore(spark, dir))
@@ -262,5 +263,18 @@ class GraphRankSpec extends AnyFunSuite {
     run(graft.functions.Dedup.minhashClusters(spark, dir))
     assert((pinned -- b4).size <= 1, // the converged label frame only
       s"components leaked: ${(pinned -- b4).size} new pins")
+
+    // BPE's lazy rounds: the returned merge table is driver-side, so
+    // training keeps nothing; encoding keeps its final lazy frame and
+    // the materialized frame that one still reads
+    val b5 = pinned
+    run(BpeTrain.bpeTrain(spark, dir))
+    assert((pinned -- b5).size === 0,
+      s"bpeTrain leaked: ${(pinned -- b5).size} new pins")
+
+    val b6 = pinned
+    run(BpeTrain.bpeEncode(spark, dir))
+    assert((pinned -- b6).size <= 2,
+      s"bpeEncode leaked: ${(pinned -- b6).size} new pins")
   }
 }
