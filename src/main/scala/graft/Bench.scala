@@ -56,12 +56,19 @@ package graft
   * pass); the artifact reports the rep set with fewer suspect flags
   * and keeps the other under `sec_rerun`/`steal_rerun`/`suspect_rerun`
   * in `_diag`, with `_rerun_queries` counting affected rows — an
-  * all-suspect median measures the hypervisor, not the code.
-  * `SPARK_GRAFT_BENCH_DIAG=1` additionally records GC and
-  * JIT-compilation milliseconds accrued inside the timed region, plus
-  * the post-GC-barrier retained heap / Metaspace / CodeHeap megabytes
-  * before each rep — the instrumentation used to attribute run-to-run
-  * drift and in-suite accumulation to a named JVM mechanism. A full run writes its artifact to
+  * all-suspect median measures the hypervisor, not the code. Every rep
+  * also records the GC and JIT-compilation milliseconds accrued inside
+  * the timed region, plus the post-GC-barrier retained heap / Metaspace /
+  * CodeHeap megabytes before it — MXBean reads outside the timed region,
+  * which attribute run-to-run drift and in-suite accumulation to a named
+  * JVM mechanism.
+  *
+  * Where the wall went: each rep is recorded by [[QueryMetrics]], with
+  * DataFrame construction timed apart inside the same timed region, so
+  * `_diag.<q>` carries per-rep arrays of its per-layer fields
+  * (`construct.ms`, `plan.*`, `exec.*`) and `_layers` sums each field's
+  * per-query median. The layers split the raw rep wall, a Materialize
+  * build inside the rep included. A full run writes its artifact to
   * `bench_full{_sfTag}_r{N}.json` unless that file is already
   * committed-and-clean in git, in which case a `-postN` sibling is
   * written instead — committed round evidence is never clobbered.
@@ -72,8 +79,10 @@ package graft
   * timed as fast.
   *
   * Local iteration aids (the driver always runs with no args): extra
-  * args restrict the run to those query names; `-explain` additionally
-  * prints each selected query's formatted physical plan before timing.
+  * args restrict the run to those query names and print, to stderr, each
+  * rep's diag and layer split followed by the last rep's stage table;
+  * `-explain` additionally prints each selected query's formatted
+  * physical plan before timing.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -98,12 +107,18 @@ object Bench {
     // computed (they differ exactly when a session pre-existed and the
     // property install was a no-op; see Session.sizeShuffleFor)
     val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        label: String): Boolean =
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name $label failed: ${e.getMessage}"); false
+    // (succeeded, System.nanoTime when construction finished or -1 if it threw)
+    def runOnce(name: String, fn: QuerySpec.Run, label: String): (Boolean, Long) = {
+      var built = -1L
+      try {
+        val df = fn(spark, sfDir)
+        built = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        (true, built)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name $label failed: ${e.getMessage}"); (false, built)
       }
+    }
     val sorted = SparkEntry.queries.toSeq
       .filter { case (name, _) => subset.isEmpty || subset(name) }
       .sortBy(_._1)
@@ -125,8 +140,6 @@ object Bench {
     // its build delta and the builds are summed into _materialize_sec.
     Materialize.invalidate(spark)
     Materialize.resetBuildClock()
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -187,8 +200,8 @@ object Bench {
         .asInstanceOf[com.sun.management.OperatingSystemMXBean]
         .getProcessCpuTime / 1e9
       catch { case _: Throwable => -1.0 }
-    // JVM-state accumulation instrumentation (recorded per rep under
-    // the diag flag, sampled at the post-GC-barrier steady state):
+    // JVM-state accumulation instrumentation (recorded per rep, sampled
+    // at the post-GC-barrier steady state):
     // used heap after a full GC is RETAINED state — growth across a
     // 273-query suite is exactly the "what accumulates in a long-lived
     // session" question; Metaspace and the CodeHeap pools grow with
@@ -202,35 +215,17 @@ object Bench {
       val r = Runtime.getRuntime
       (r.totalMemory - r.freeMemory) >> 20
     }
-    // Task CPU seconds per measurement: the statistic external
-    // co-scheduled load can't inflate the way it inflates wall-clock
+    // Per-rep engine metrics. Task CPU seconds (`cpu_s`) is the statistic
+    // external co-scheduled load can't inflate the way it inflates wall
     // (a stolen core stalls the wall; CPU time only grows via cache/
-    // memory-bandwidth contention). When a rep's wall diverges from its
-    // cpu_s against a high `load` sample, the run is ambient-inflated,
-    // not regressed — readable straight off the artifact now.
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) taskCpuNs.addAndGet(m.executorCpuTime)
-          ()
-        }
-      })
-    // cpu_s integrity: TaskEnd events are delivered async — drain the
-    // listener bus at both sample points so a rep's CPU never bleeds
-    // into the next rep's delta (the _diag field exists to be read)
-    def drainBus(): Unit = {
-      org.apache.spark.sql.graftexpr.ListenerDrain.drain(spark.sparkContext)
-      ()
-    }
+    // memory-bandwidth contention): a rep whose wall diverges from its
+    // cpu_s against a high `load` sample is ambient-inflated, not regressed.
+    val metrics = QueryMetrics.install(spark)
     // one measured rep's full record
     case class Rep(sec: Double, gcMs: Long, jitMs: Long, load: Double,
-        cpuS: Double, extCores: Double, stealCores: Double,
-        suspect: Boolean, heapMb: Long, metaMb: Long, codeMb: Long)
-    def measure(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Rep] = {
+        extCores: Double, stealCores: Double, suspect: Boolean,
+        heapMb: Long, metaMb: Long, codeMb: Long, m: QueryMetrics.Snapshot)
+    def measure(name: String, fn: QuerySpec.Run): Seq[Rep] = {
       // adjacent unmeasured warm-up rep (see methodology scaladoc):
       // absorbs whole-JVM warm-up accrued since the suite warm pass and
       // — for each Materialize artifact's first consumer — the lazy
@@ -253,28 +248,27 @@ object Bench {
           poolUsedMb("CodeHeap"))
         val la = loadAvg
         val (g0, j0, b0) = (gcMillis, jitMillis, Materialize.buildSeconds)
-        drainBus()
-        val c0 = taskCpuNs.get()
+        metrics.reset()
         val ((busy0, steal0), prc0) = (sysBusySec, procCpuSec)
         val t0 = System.nanoTime()
-        val ok = runOnce(name, fn, "measure")
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (ok, built) = runOnce(name, fn, "measure")
+        val t1 = System.nanoTime()
+        val wall = (t1 - t0) / 1e9
         val ((busy1, steal1), prc1) = (sysBusySec, procCpuSec)
         val sec = wall -
           (Materialize.buildSeconds - b0) // builds reported separately
         val (gMs, jMs) = (gcMillis - g0, jitMillis - j0)
-        drainBus()
-        val cpuS = (taskCpuNs.get() - c0) / 1e9
+        val m = metrics.snapshot(t0, if (built < 0) t1 else built, t1)
         spark.catalog.clearCache() // teardown outside the timed region
         val ext =
           if (busy0 < 0 || prc0 < 0 || wall <= 0) -1.0
           else math.max(0.0, ((busy1 - busy0) - (prc1 - prc0)) / wall)
         val stl =
           if (steal0 < 0 || wall <= 0) -1.0 else (steal1 - steal0) / wall
-        Rep(if (ok) sec else -1.0, gMs, jMs, la, cpuS,
+        Rep(if (ok) sec else -1.0, gMs, jMs, la,
           math.rint(ext * 100) / 100, math.rint(stl * 100) / 100,
           ext + stl > SuspectExtCores && wall > SuspectMinWall,
-          hMb, mMb, cMb)
+          hMb, mMb, cMb, m)
       }
     }
     val firstPass = sorted.map { case (name, fn) => name -> measure(name, fn) }
@@ -300,16 +294,20 @@ object Bench {
       }
     }
     // subset runs are the local-iteration/probe path and write no
-    // artifact — print the per-rep diag to stderr so a probe can read
-    // wall vs cpu_s vs ext without a full-suite run
+    // artifact — print each rep's diag and layer split to stderr, then the
+    // last rep's stage table, so a probe can read wall vs cpu_s vs ext
+    // and where the wall went without a full-suite run
     if (subset.nonEmpty) samples.foreach { case (name, rs, _) =>
       rs.zipWithIndex.foreach { case (r, i) =>
         System.err.println(
-          f"[bench-diag] $name rep${i + 1} sec=${r.sec}%.3f cpu_s=${r.cpuS}%.1f " +
+          f"[bench-diag] $name rep${i + 1} sec=${r.sec}%.3f cpu_s=${r.m.taskCpuS}%.1f " +
             f"load=${r.load}%.2f ext=${r.extCores}%.2f steal=${r.stealCores}%.2f " +
-            f"suspect=${r.suspect} " +
+            f"suspect=${r.suspect} gc=${r.gcMs}ms jit=${r.jitMs}ms " +
             f"heap=${r.heapMb}MB meta=${r.metaMb}MB code=${r.codeMb}MB")
+        System.err.println(s"[bench-diag] $name rep${i + 1} ${r.m.describe}")
       }
+      System.err.println(s"[bench-diag] ==== $name stages (rep ${rs.size}) ====")
+      rs.last.m.stageTable.foreach(st => System.err.println(s"[bench-diag]   ${st.describe}"))
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -336,40 +334,40 @@ object Bench {
         .map(_.getName.replaceAll("\\D", "").toInt).foldLeft(0)(math.max) + 1
       val builds = Materialize.buildBreakdown
         .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-      // loadavg and ext-cores are ALWAYS in _diag (gc/jit/JVM-state
-      // pools only under the env flag): ext is the field that tells an
-      // ambient-load-inflated run apart from a regression, and the runs
-      // that need telling apart are exactly the ones nobody thought to
-      // instrument
+      // everything is ALWAYS in _diag: the runs that need telling apart
+      // (ambient load vs regression) are the ones nobody thought to instrument
+      def num(v: Double): String =
+        if (v == math.rint(v)) v.toLong.toString else (math.rint(v * 1000) / 1000).toString
+      def arr[T](xs: Seq[T]): String = xs.mkString("[", ",", "]")
       val suspectReps = samples.map(_._2.count(_.suspect)).sum
       val rerunQueries = samples.count(_._3.nonEmpty)
       val diagBody = samples.map { case (k, rs, other) =>
-        val secs = rs.map(_.sec).mkString("[", ",", "]")
-        val loads = rs.map(_.load).mkString("[", ",", "]")
-        val cpus = rs.map(r => math.rint(r.cpuS * 1000) / 1000).mkString("[", ",", "]")
-        val exts = rs.map(_.extCores).mkString("[", ",", "]")
-        val steals = rs.map(_.stealCores).mkString("[", ",", "]")
         val sus = if (!rs.exists(_.suspect)) ""
-          else rs.map(_.suspect).mkString(""","suspect":[""", ",", "]")
+          else s""","suspect":${arr(rs.map(_.suspect))}"""
         // the rep set NOT reported (all-suspect re-run pass): kept on
         // the record so both measurements are auditable
         val rerun = other.map { o =>
-          s""","sec_rerun":${o.map(_.sec).mkString("[", ",", "]")}""" +
-            s""","steal_rerun":${o.map(_.stealCores).mkString("[", ",", "]")}""" +
-            s""","suspect_rerun":${o.map(_.suspect).mkString("[", ",", "]")}"""
+          s""","sec_rerun":${arr(o.map(_.sec))},"steal_rerun":${arr(o.map(_.stealCores))}""" +
+            s""","suspect_rerun":${arr(o.map(_.suspect))}"""
         }.getOrElse("")
-        val gcJit = if (!diag) "" else {
-          val gcs = rs.map(_.gcMs).mkString("[", ",", "]")
-          val jits = rs.map(_.jitMs).mkString("[", ",", "]")
-          val heaps = rs.map(_.heapMb).mkString("[", ",", "]")
-          val metas = rs.map(_.metaMb).mkString("[", ",", "]")
-          val codes = rs.map(_.codeMb).mkString("[", ",", "]")
-          s""","gc_ms":$gcs,"jit_ms":$jits,"heap_mb":$heaps,"meta_mb":$metas,"code_mb":$codes"""
-        }
-        s"""    "$k": {"sec":$secs,"load":$loads,"cpu_s":$cpus,"ext":$exts,"steal":$steals$sus$rerun$gcJit}"""
+        val jvm = s""","gc_ms":${arr(rs.map(_.gcMs))},"jit_ms":${arr(rs.map(_.jitMs))}""" +
+          s""","heap_mb":${arr(rs.map(_.heapMb))},"meta_mb":${arr(rs.map(_.metaMb))}""" +
+          s""","code_mb":${arr(rs.map(_.codeMb))}"""
+        val layers = rs.map(_.m.layers).transpose.map { col =>
+          s""","${col.head._1}":${arr(col.map(l => num(l._2)))}"""
+        }.mkString
+        s"""    "$k": {"sec":${arr(rs.map(_.sec))},"load":${arr(rs.map(_.load))},""" +
+          s""""cpu_s":${arr(rs.map(r => math.rint(r.m.taskCpuS * 1000) / 1000))},""" +
+          s""""ext":${arr(rs.map(_.extCores))},"steal":${arr(rs.map(_.stealCores))}$sus$rerun$jvm$layers}"""
       }.mkString("  \"_diag\": {\n", ",\n", "\n  },\n")
+      // per-layer roll-up: the sum over measured queries of each field's
+      // median, the same rows _total_sec sums
+      val layersBody = samples.filter(_._2.forall(_.sec >= 0))
+        .map(_._2.map(_.m.layers).transpose.map(col => col.head._1 -> median(col.map(_._2))))
+        .transpose.map(col => s""""${col.head._1}": ${num(col.map(_._2).sum)}""")
+        .mkString("{", ", ", "}")
       val body = results.map { case (k, v) => s"""  "$k": $v""" }
-        .mkString(s"""{\n  "_sf": "$sfDir",\n  "_total_sec": $total,\n  "_reps": $reps,\n  "_warmup_reps": 1,\n  "_suspect_reps": $suspectReps,\n  "_rerun_queries": $rerunQueries,\n  "_shuffle_partitions": $shuffleWidth,\n  "_materialize_sec": $matSec,\n  "_materialize_builds": $builds,\n$diagBody""",
+        .mkString(s"""{\n  "_sf": "$sfDir",\n  "_total_sec": $total,\n  "_reps": $reps,\n  "_warmup_reps": 1,\n  "_suspect_reps": $suspectReps,\n  "_rerun_queries": $rerunQueries,\n  "_shuffle_partitions": $shuffleWidth,\n  "_materialize_sec": $matSec,\n  "_materialize_builds": $builds,\n  "_layers": $layersBody,\n$diagBody""",
           ",\n", "\n}\n")
       // non-driver scales (e.g. the sf1 audit runs) get their own
       // artifact name so they never clobber the round's sf0.1 record

@@ -17,7 +17,7 @@ object Tables {
     * Every `spark.read.parquet(path)` call resolves the relation from
     * scratch: a driver-side directory listing plus a one-task Spark JOB
     * that reads a parquet footer for schema inference — measured at
-    * 40-90 ms per table per call on this machine (graft.Profile), paid
+    * 40-90 ms per table per call on this machine (Bench `construct.ms`), paid
     * by EVERY query construction, every bench rep (multi-table TPC-H
     * shapes paid 300-400 ms per rep before any data moved). Spark's own
     * catalog does exactly this caching for metastore tables (the

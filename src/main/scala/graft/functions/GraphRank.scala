@@ -69,32 +69,6 @@ object GraphRank {
     out
   }
 
-  /** Per-vertex triangle count and local clustering coefficient over
-    * the UNDIRECTED k-NN similarity graph — the neighborhood-density
-    * signal for curation: a document whose neighbors are also mutual
-    * neighbors sits inside a tight near-dup community (high lcc),
-    * while a hub whose neighbors don't know each other bridges
-    * unrelated regions (low lcc).
-    *
-    * Scale shape (the node-iterator++ / MapReduce triangle-counting
-    * pattern, Suri & Vassilvitskii WWW'11): each undirected edge is
-    * ORIENTED from its (degree, id)-smaller endpoint to the larger, so
-    * wedges are enumerated only at each triangle's order-minimal vertex
-    * — out-degrees are O(√m)-bounded, which caps the wedge explosion at
-    * hub nodes that a naive id-ordered enumeration would suffer (a
-    * k-NN graph's IN-degree is unbounded even though out-degree ≤ k).
-    * Wedge closure is one equi-join back against the (a < b)-keyed edge
-    * set; per-vertex counts come from a 3-way explode of each triangle.
-    * Every triangle is counted exactly once: only its (deg,id)-minimal
-    * vertex has oriented out-edges to the other two. The oracle
-    * replays triangles with the orientation-free a<b<c nested join —
-    * same result set, independently derived.
-    *
-    * Edges and the degree table are `localCheckpoint`ed like the
-    * [[pagerank]] iteration state: the edge set feeds three plan
-    * branches (two wedge sides + closure) and would otherwise re-run
-    * the LSH candidate join per branch.
-    */
   /** Undirected a<b edge set of the k-NN graph, a session-shared
     * artifact ([[graft.Materialize]]): it feeds several plan branches
     * within the triangle family AND is the common substrate of
@@ -134,6 +108,32 @@ object GraphRank {
       .select(col("u"), col("v"), col("w"))
   }
 
+  /** Per-vertex triangle count and local clustering coefficient over
+    * the UNDIRECTED k-NN similarity graph — the neighborhood-density
+    * signal for curation: a document whose neighbors are also mutual
+    * neighbors sits inside a tight near-dup community (high lcc),
+    * while a hub whose neighbors don't know each other bridges
+    * unrelated regions (low lcc).
+    *
+    * Scale shape (the node-iterator++ / MapReduce triangle-counting
+    * pattern, Suri & Vassilvitskii WWW'11): each undirected edge is
+    * ORIENTED from its (degree, id)-smaller endpoint to the larger, so
+    * wedges are enumerated only at each triangle's order-minimal vertex
+    * — out-degrees are O(√m)-bounded, which caps the wedge explosion at
+    * hub nodes that a naive id-ordered enumeration would suffer (a
+    * k-NN graph's IN-degree is unbounded even though out-degree ≤ k).
+    * Wedge closure is one equi-join back against the (a < b)-keyed edge
+    * set; per-vertex counts come from a 3-way explode of each triangle.
+    * Every triangle is counted exactly once: only its (deg,id)-minimal
+    * vertex has oriented out-edges to the other two. The oracle
+    * replays triangles with the orientation-free a<b<c nested join —
+    * same result set, independently derived.
+    *
+    * Edges and the degree table are `localCheckpoint`ed like the
+    * [[pagerank]] iteration state: the edge set feeds three plan
+    * branches (two wedge sides + closure) and would otherwise re-run
+    * the LSH candidate join per branch.
+    */
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
     val und = undirected(spark, dir)
     val deg = degrees(und)

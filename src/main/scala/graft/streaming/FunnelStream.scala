@@ -26,7 +26,7 @@ import graft._
   * Persistent state is the fixed-width chain (3 longs per user — the
   * funnel is an over-all-time journey, so the chain has no TTL; a
   * deployment bounding it would add an inactivity timeout exactly like
-  * [[VisitorPipeline.uvStreamingTtl]]); the transient buffer holds only
+  * [[VisitorPipeline.bounceStreaming]]); the transient buffer holds only
   * in-flight events inside the watermark horizon. The downstream count
   * aggregate keys on 3 step rows.
   */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -33,42 +32,6 @@ object VisitorPipeline {
       prepared.withWatermark("event_time", "1 day")
         .dropDuplicatesWithinWatermark("mid", "dt")
     else prepared.dropDuplicates("mid", "dt")
-  }
-
-  /** Exact-TTL variant: flatMapGroupsWithState with event-time timeout,
-    * for when the 24 h sliding-TTL semantics (not calendar-day) must be
-    * mirrored exactly.
-    */
-  def uvStreamingTtl(events: Dataset[PageEvent]): Dataset[PageEvent] = {
-    val enc = Encoders.product[PageEvent]
-    val streaming = events.isStreaming
-    withEventTimeWatermark(events).groupByKey(_.mid)(Encoders.STRING)
-      .flatMapGroupsWithState[String, PageEvent](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, it: Iterator[PageEvent], state: GroupState[String]) =>
-          if (it.isEmpty && state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val out = scala.collection.mutable.ArrayBuffer[PageEvent]()
-            var last = state.getOption.getOrElse("")
-            val sorted = it.toSeq.sortBy(_.ts)
-            sorted.foreach { e =>
-              if (e.last_page_id == null || e.last_page_id.isEmpty) {
-                val dt = java.time.Instant.ofEpochMilli(e.ts)
-                  .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-                if (dt != last) { out += e; last = dt }
-              }
-            }
-            state.update(last)
-            // TTL anchored on the newest event for this key (the
-            // watermark alone is epoch-0 in the first batch, which would
-            // evict all day-1 state at batch 2); timeout APIs only exist
-            // under a streaming watermark
-            if (streaming) state.setTimeoutTimestamp(math.max(
-              state.getCurrentWatermarkMs() + 1,
-              sorted.last.ts + 86400000L))
-            out.iterator
-          }
-      }(Encoders.STRING, enc)
   }
 
   // ---- ST3: bounce (jump-out) detection --------------------------------

@@ -2,17 +2,11 @@ package org.apache.spark.sql.graftexpr
 
 import org.apache.spark.SparkContext
 
-/** Bridge to the `private[spark]` listener bus: lets [[graft.Bench]]
-  * drain queued `SparkListenerTaskEnd` events before sampling its
-  * task-CPU accumulator.
-  *
-  * Why it exists: Bench accumulates `executorCpuTime` via an async
-  * `SparkListener`. The listener bus delivers events on its own
-  * thread, so at the instant a measurement's wall clock stops, TaskEnd
-  * events from that measurement can still be QUEUED — their CPU would
-  * be read into the NEXT rep's `cpu_s` delta, skewing exactly the
-  * `_diag` data the accumulator exists to make trustworthy. Draining
-  * the bus at both sample points pins each rep's CPU to its own reps.
+/** Bridge to the `private[spark]` listener bus: lets [[graft.QueryMetrics]]
+  * deliver every queued event before it resets or snapshots a rep. The
+  * bus delivers on its own thread, so when a rep's wall clock stops its
+  * TaskEnd events can still be queued and would be read into the next
+  * rep.
   *
   * Lives in `org.apache.spark.sql.graftexpr` (inside the
   * `org.apache.spark` tree) because `SparkContext.listenerBus` is
@@ -22,7 +16,7 @@ import org.apache.spark.SparkContext
 object ListenerDrain {
   /** Block until the listener bus has delivered every queued event, or
     * `timeoutMs` elapses. Returns false on timeout/failure — callers
-    * treat that as "cpu_s may carry cross-rep bleed" rather than an
+    * treat that as "the rep may carry cross-rep bleed" rather than an
     * error (the measurement itself is unaffected).
     */
   def drain(sc: SparkContext, timeoutMs: Long = 10000L): Boolean =
